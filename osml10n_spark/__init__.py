@@ -8,6 +8,8 @@ Public API:
     osml10n_spark.engine    — localize() pipeline, snapshots, metrics
     osml10n_spark.udfs      — pandas UDF wrappers + SQL registration
 """
+from . import _zipguard  # noqa: F401  (installs the zip-archive re-read guard)
+
 __version__ = "0.1.0"
 
 

@@ -8,10 +8,12 @@ plan*, not prose — these helpers turn ``df.explain("formatted")`` into
 assertions so regressions in plan shape fail CI the same way wrong
 values would (SURVEY.md §4).
 
-All parsing works on the formatted explain string of the *executed*
-plan (AQE final plans included via the initial plan text); matching is
-deliberately substring-loose so Spark-version formatting drift doesn't
-break the suite.
+Parsing works on the explain string of the plan as it stands: before
+execution that is the AQE initial plan; after it, an
+``AdaptiveSparkPlan`` prints its ``== Final Plan ==`` and then its
+``== Initial Plan ==``, and the operator counters read the final plan
+only.  Matching is deliberately substring-loose so Spark-version
+formatting drift doesn't break the suite.
 """
 from __future__ import annotations
 
@@ -34,6 +36,23 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode)
     return buf.getvalue()
+
+
+def _final_plan(df: DataFrame) -> str:
+    """The "simple" plan without the ``== Initial Plan ==`` subtrees an
+    executed AQE plan prints after its final plan, so that every
+    operator is counted once whether or not ``df`` has run."""
+    kept, cut = [], None
+    for line in physical_plan(df, "simple").splitlines():
+        indent = len(line) - len(line.lstrip())
+        if cut is not None and line.strip() and indent > cut:
+            continue
+        cut = None
+        if "== Initial Plan ==" in line:
+            cut = indent
+            continue
+        kept.append(line)
+    return "\n".join(kept)
 
 
 def scan_read_schemas(df: DataFrame) -> list[str]:
@@ -59,10 +78,9 @@ def has_broadcast_join(df: DataFrame) -> bool:
 
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges)."""
-    simple = physical_plan(df, "simple")
     return len(re.findall(
         r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)",
-        simple))
+        _final_plan(df)))
 
 
 def wholestage_codegen_count(df: DataFrame) -> int:
@@ -77,7 +95,7 @@ def python_eval_count(df: DataFrame) -> int:
     """ArrowEvalPython / BatchEvalPython operators in the plan — the
     Python islands.  BatchEvalPython (row-at-a-time) should be ZERO
     everywhere in this engine."""
-    plan = physical_plan(df, "simple")
+    plan = _final_plan(df)
     return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
 
 
@@ -105,7 +123,7 @@ def assert_filter_pushed(df: DataFrame, needle: str) -> None:
 
 
 def assert_no_shuffle(df: DataFrame) -> None:
-    simple = physical_plan(df, "simple")
+    simple = _final_plan(df)
     for marker in ("Exchange hashpartitioning", "Exchange rangepartitioning",
                    "Exchange RoundRobin", "Exchange SinglePartition"):
         if marker in simple:

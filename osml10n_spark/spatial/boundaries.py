@@ -12,7 +12,9 @@ the reference's filesystem iteration order.
 """
 from __future__ import annotations
 
+import errno
 import json
+import os
 import pathlib
 import pickle
 
@@ -20,9 +22,14 @@ import numpy as np
 
 from .geometry import PackedPolygon, pack_polygon
 
-__all__ = ["BoundaryIndex", "load_boundaries", "REFERENCE_BOUNDARY_DIR"]
+__all__ = ["BoundaryIndex", "BoundaryDirNotFound", "load_boundaries",
+           "REFERENCE_BOUNDARY_DIR"]
 
 REFERENCE_BOUNDARY_DIR = "/root/reference/osml10n/boundaries"
+
+
+class BoundaryDirNotFound(FileNotFoundError):
+    """The boundary directory does not exist (or is not a directory)."""
 
 
 class BoundaryIndex:
@@ -71,11 +78,22 @@ def _feature_rings(geometry: dict) -> list:
     return rings
 
 
-def load_boundaries(dirname: str = REFERENCE_BOUNDARY_DIR) -> BoundaryIndex:
+def load_boundaries(dirname: str | None = None) -> BoundaryIndex:
     """Read every *.geojson feature in ``dirname`` (loader semantics of
-    geo-transcript-srv.py:186-199) and pack into a BoundaryIndex."""
+    geo-transcript-srv.py:186-199) and pack into a BoundaryIndex.
+
+    ``dirname=None`` reads ``$OSML10N_BOUNDARIES``, else
+    ``REFERENCE_BOUNDARY_DIR``; a missing directory raises
+    ``BoundaryDirNotFound`` naming both the variable and the path."""
+    if dirname is None:
+        dirname = os.environ.get("OSML10N_BOUNDARIES", REFERENCE_BOUNDARY_DIR)
+    root = pathlib.Path(dirname)
+    if not root.is_dir():
+        raise BoundaryDirNotFound(
+            errno.ENOENT, "boundary directory not found; point "
+            "OSML10N_BOUNDARIES at a directory of *.geojson files", str(root))
     polys: list[PackedPolygon] = []
-    for path in sorted(pathlib.Path(dirname).iterdir()):
+    for path in sorted(root.iterdir()):
         if path.is_file() and path.suffix == ".geojson":
             with open(path) as f:
                 doc = json.load(f)

@@ -14,12 +14,9 @@ Design rules:
 """
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, LongType, StringType)
+from pyspark.sql.types import ArrayType, BooleanType, StringType
 from pyspark.sql.functions import pandas_udf
 
 from .kernels import abbrev as _abbrev
@@ -33,8 +30,7 @@ __all__ = [
     "udf_is_latin", "udf_transliterate", "udf_country_name",
     "make_cascade_udf",
     "udf_placename", "udf_streetname", "udf_country_lookup",
-    "udf_country_gated", "udf_cell_id",
-    "udf_tile_id", "udf_zorder_key", "register_all",
+    "udf_country_gated", "register_all",
 ]
 
 # ------------------------------------------------------------------
@@ -46,10 +42,7 @@ def _prepared():
     if "prep" not in _STATE:
         from .spatial.boundaries import load_boundaries
         from .spatial.prepared import PreparedLookup
-        dirname = os.environ.get("OSML10N_BOUNDARIES",
-                                 "/root/reference/osml10n/boundaries")
-        idx = load_boundaries(dirname)
-        _STATE["prep"] = PreparedLookup(idx, res=9)
+        _STATE["prep"] = PreparedLookup(load_boundaries(), res=9)
     return _STATE["prep"]
 
 
@@ -423,40 +416,6 @@ def udf_country_gated(name: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Ser
         if i not in cjk_set and v is not None and contains_thai(v):
             out[i] = "th"
     return pd.Series(out, dtype=object)
-
-
-def _make_cell_udf(res: int):
-    from .spatial.cellindex import cell_from_lonlat
-
-    @pandas_udf(LongType())
-    def _u(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cell_from_lonlat(
-            lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64), res))
-    return _u
-
-
-def udf_cell_id(lon, lat, res: int = 9):
-    return _make_cell_udf(res)(lon, lat)
-
-
-def udf_zorder_key(lon, lat, z: int = 16):
-    from .spatial.cellindex import zorder_key
-
-    @pandas_udf(LongType())
-    def _u(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(zorder_key(lo.to_numpy(dtype=np.float64),
-                                    la.to_numpy(dtype=np.float64), z))
-    return _u(lon, lat)
-
-
-def udf_tile_id(lon, lat, z: int = 8, maxz: int = 16):
-    from .spatial.cellindex import tile_from_lonlat
-
-    @pandas_udf(LongType())
-    def _u(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return pd.Series(tile_from_lonlat(lo.to_numpy(dtype=np.float64),
-                                          la.to_numpy(dtype=np.float64), z, maxz))
-    return _u(lon, lat)
 
 
 # ------------------------------------------------------------------

@@ -9,8 +9,10 @@ assertions over the optimized physical plan.
   BatchEvalPython anywhere),
 - whole-stage codegen present around the JVM ladders.
 """
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from osml10n_spark.plans import (
     assert_broadcast_join, assert_column_pruned, assert_filter_pushed,
@@ -68,6 +70,20 @@ def test_dim_rollup_uses_broadcast_joins(spark):
     joined = o.join(F.broadcast(c), o.o_custkey == c.c_custkey) \
         .groupBy("c_nationkey").count()
     assert_broadcast_join(joined)
+
+
+def test_plan_counters_read_the_final_plan_after_execution(spark):
+    """An executed AQE plan prints its final plan and then its initial
+    plan; each operator must still count once."""
+    @pandas_udf("long")
+    def plus1(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    df = spark.range(100).withColumn("y", plus1("id")) \
+        .groupBy((F.col("id") % 3).alias("k")).agg(F.sum("y"))
+    assert (exchange_count(df), python_eval_count(df)) == (1, 1)
+    df.collect()
+    assert (exchange_count(df), python_eval_count(df)) == (1, 1)
 
 
 def test_agg_has_single_shuffle_and_codegen(spark):
