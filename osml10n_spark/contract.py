@@ -3243,6 +3243,12 @@ def _resolve_oracle(name: str) -> str:
     return v() if callable(v) else v
 
 
+def oracle_for(name: str) -> str | None:
+    """The oracle SQL of one query (None if it has none), built on its
+    own: an oracle that cannot be built fails only its own query."""
+    return _resolve_oracle(name) if name in ORACLES else None
+
+
 def resolve_oracles() -> dict[str, str]:
     """ORACLES with every lazily-built (callable) entry resolved to its
     SQL string — cached, so repeated callers (the per-query gate tests)

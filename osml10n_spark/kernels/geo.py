@@ -68,8 +68,3 @@ def default_transcriptor() -> Transcriptor:
     if _DEFAULT is None:
         _DEFAULT = Transcriptor(load_boundaries())
     return _DEFAULT
-
-
-def set_default_transcriptor(t: Transcriptor) -> None:
-    global _DEFAULT
-    _DEFAULT = t

@@ -29,15 +29,21 @@ __all__ = [
 ]
 
 # Observability for the iterative kNN (driver-side, overwritten per
-# call): rounds run, per-round still-pending counts, stragglers routed
-# to brute force, initial ring.  A production job logs/emits this dict
-# per stage — convergence-in-1-round vs 4 is THE constant factor of
-# this operator, and it is invisible in the physical plan.
+# call): initial ring and its source ("computed" or "cached"), rounds
+# run, per-round pending counts, stragglers, and the queries routed to
+# the brute-force fallback.  Rounds-to-converge is the operator's
+# constant factor and is invisible in the physical plan.
 KNN_LAST_RUN: dict = {}
 
-# (items semanticHash, res, k) → density-derived initial ring; see
-# _knn_core.  Perf-only memo: the ring never affects results.
+# (items plan semanticHash, res, k) → density-derived initial ring,
+# LRU-bounded.  Perf-only memo: the ring never affects results.
 _KNN_RING_CACHE: dict = {}
+
+MAX_ROUNDS = 4            # cell rounds before the rest go to brute force
+MAX_RING = 24             # a query whose ring would exceed this → brute force
+# at or below this many pending queries, one more cell round costs more
+# in fixed job overhead than the bounded brute-force fallback
+MIN_ROUND_PENDING = 64
 
 
 def assign_country(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
@@ -110,18 +116,31 @@ def _sq_dist(qlon, qlat, ilon, ilat):
     return (qlon - ilon) * (qlon - ilon) + (qlat - ilat) * (qlat - ilat)
 
 
+def _located(df: DataFrame) -> DataFrame:
+    """Rows with a position: NULL or NaN ``lon``/``lat`` has no distance
+    to anything, and NULL ``dist2`` would sort first as the nearest."""
+    ok = F.lit(True)
+    for c in ("lon", "lat"):
+        ok = ok & F.col(c).isNotNull() & ~F.isnan(c)
+    return df.filter(ok)
+
+
 def knn_geo(queries: DataFrame, items: DataFrame, k: int,
             qid_col: str = "qid", iid_col: str = "iid",
             broadcast_items: bool = True) -> DataFrame:
     """Brute-force top-k nearest items per query point.
 
     Correct for any input; intended for small/broadcastable item sides
-    and as the oracle for knn_cells.  Output: (qid, iid, dist2, rank).
+    and as the oracle for knn_cells.  Rows without a position (NULL or
+    NaN coordinates) are dropped on both sides, so such a query returns
+    no rows.  Output: (qid, iid, dist2, rank).
     """
-    q = queries.select(F.col(qid_col).alias("qid"),
-                       F.col("lon").alias("q_lon"), F.col("lat").alias("q_lat"))
-    i = items.select(F.col(iid_col).alias("iid"),
-                     F.col("lon").alias("i_lon"), F.col("lat").alias("i_lat"))
+    q = _located(queries).select(F.col(qid_col).alias("qid"),
+                                 F.col("lon").alias("q_lon"),
+                                 F.col("lat").alias("q_lat"))
+    i = _located(items).select(F.col(iid_col).alias("iid"),
+                               F.col("lon").alias("i_lon"),
+                               F.col("lat").alias("i_lat"))
     if broadcast_items:
         i = F.broadcast(i)
     joined = q.crossJoin(i).withColumn(
@@ -149,15 +168,16 @@ def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
     residue at sf0.1, measured ~5s of the round-2 kNN record.
 
     dist2 is bit-identical to knn_geo's JVM expression (same IEEE op
-    sequence), and per-partition selection keeps ALL rows tied at the
+    sequence), rows without a position are dropped on both sides as in
+    knn_geo, and per-partition selection keeps ALL rows tied at the
     k-th distance before (dist2, iid) ordering, so the merged result is
     exactly knn_geo's — ties included.  Output: (qid, iid, dist2, rank).
     """
     import numpy as np
     import pandas as pd
 
-    qrows = queries.select(F.col(qid_col).alias("qid"),
-                           F.col("lon"), F.col("lat")) \
+    qrows = _located(queries).select(F.col(qid_col).alias("qid"),
+                                     F.col("lon"), F.col("lat")) \
         .limit(max_queries + 1).collect()
     if len(qrows) > max_queries:
         raise ValueError(
@@ -204,7 +224,7 @@ def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
                     out_d.append(float(dj[t]))
             yield pd.DataFrame({"qid": out_q, "iid": out_i, "dist2": out_d})
 
-    partial = items.select(F.col(iid_col).alias("iid"), "lon", "lat") \
+    partial = _located(items).select(F.col(iid_col).alias("iid"), "lon", "lat") \
         .mapInPandas(part, schema=out_schema)
     w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
                                           F.col("iid").asc())
@@ -214,176 +234,59 @@ def knn_geo_bq(queries: DataFrame, items: DataFrame, k: int,
 
 
 def knn_cells(queries: DataFrame, items: DataFrame, k: int,
-              res: int = 7, qid_col: str = "qid", iid_col: str = "iid",
-              max_rounds: int = 4, initial_ring: int | None = None,
-              split_heavy: bool = False) -> DataFrame:
+              res: int = 7, qid_col: str = "qid",
+              iid_col: str = "iid") -> DataFrame:
     """Scalable kNN: k-ring candidate equi-join + exact refine (J5/W5).
 
     Each round joins queries against items in cells within Chebyshev
-    ring radius r (per query) of the query cell.  A query is DONE when
-    it has ≥k candidates and its k-th squared distance ≤ (ring·cell)² —
-    items outside the ring are provably farther.  Ring growth is
-    per-query adaptive: a query that already holds k candidates jumps
-    straight to ring' = ceil(sqrt(kth)/cell) — provably final next
-    round; candidate-starved queries grow 4×, and queries whose ring
-    would exceed MAX_RING route to the brute-force fallback instead of
-    exploding into thousands of candidate cells.
+    ring radius r (per query) of the query cell and keeps only
+    candidates within the guard radius r·cell, which the ring's cells
+    cover completely.  A query is DONE when it holds ≥k such
+    candidates: every item outside the guard is farther than all of
+    them.  An open query's ring grows 4×, and a query whose ring would
+    exceed MAX_RING routes to the brute-force fallback instead of
+    exploding into thousands of candidate cells.  The loop stops after
+    MAX_ROUNDS rounds, once at most MIN_ROUND_PENDING queries are
+    pending, or when a round resolves none; every query still open
+    then takes the brute-force fallback, so the result is exact.
 
-    ``initial_ring`` defaults to a density-derived estimate: the ring
-    whose (2r+1)² cell neighborhood is expected to hold ≥4k candidates
-    at the observed mean occupancy, so sparse corpora don't waste
-    rounds climbing from ring 1.
-
-    ``split_heavy`` (opt-in) adds hierarchical skew handling beyond
-    AQE: queries whose ring-1 neighborhood touches a *heavy* cell
-    (> max(64k, 8·mean) items) re-run the SAME algorithm at a finer
-    resolution picked from the heaviest cell's population, capping the
-    candidates a dense cell contributes per query.  Both passes are
-    exact; results union.  Default OFF: measured A/B at sf0.1 (150k
-    items, 40k-item Tokyo cell, 1000 queries) the split's extra
-    orchestration (second core pass + histogram) costs ~3× more than
-    the 9.2M→1M candidate-row saving returns — it pays only when heavy
-    cells hold millions of rows so the window sort, not job overhead,
-    dominates.  (Round 3 trimmed the split path from 4 driver jobs to
-    2 — mean+heavy fused into one agg, the two isEmpty() probes into
-    one countDistinct pass — which shaves the fixed cost but does not
-    flip the A/B at sandbox scale.)
+    The initial ring is density-derived: the smallest ring whose
+    (2r+1)² cell neighborhood is expected to hold ≥4k candidates at the
+    observed mean occupancy, memoized in ``_KNN_RING_CACHE``.
 
     Equi-join on cell ids shuffles by cell — co-located, broadcast-free.
-    Output: (qid, iid, dist2, rank).
+    Output: (qid, iid, dist2, rank), persisted for the caller.
     """
-    q_pts = queries.select(F.col(qid_col).alias("qid"),
-                           F.col("lon"), F.col("lat"))
-    i_pts = items.select(F.col(iid_col).alias("iid"),
-                         F.col("lon"), F.col("lat")).persist()
-
-    if split_heavy:
-        import math
-
-        hist = assign_cells(i_pts, res).groupBy("cell_id") \
-            .agg(F.count("*").alias("n"))
-        # ONE driver job for mean occupancy + heavy candidates: cells
-        # with n > 64k are a superset of "heavy" for any mean (the
-        # final threshold is max(64k, 8·mean) ≥ 64k) and there are at
-        # most total/64k of them, so the collect_list stays bounded
-        agg = hist.agg(
-            F.avg("n").alias("m"),
-            F.collect_list(F.when(F.col("n") > 64 * k,
-                                  F.struct("cell_id", "n"))).alias("big"),
-        ).collect()[0]
-        mean_n = agg.m or 1.0
-        thresh = max(64 * k, 8 * mean_n)
-        heavy = [(r.cell_id, r.n) for r in agg.big if r.n > thresh]
-        if heavy:
-            heavy_ids = [h[0] for h in heavy]
-            max_n = max(h[1] for h in heavy)
-            # halving the cell side quarters its population: pick the
-            # res where the heaviest cell drops to ~32k per cell
-            extra = max(2, math.ceil(math.log(max_n / (32.0 * k), 4)))
-            res_fine = min(res + extra, 15)
-            qa = assign_cells(q_pts, res) \
-                .withColumnRenamed("cell_id", "q_cell") \
-                .withColumn("ring", F.lit(1)) \
-                .withColumnRenamed("lon", "q_lon") \
-                .withColumnRenamed("lat", "q_lat")
-            ring1 = _ring_cells_df(qa, res, 1)
-            near_heavy = (ring1.filter(F.col("n_cell").isin(heavy_ids))
-                          .select("qid").distinct())
-            # ONE job decides both splits (every query emits its own
-            # ring-1 cells, so n_q counts ALL queries) — replaces the
-            # two isEmpty() driver round-trips
-            counts = ring1.agg(
-                F.countDistinct("qid").alias("n_q"),
-                F.countDistinct(F.when(F.col("n_cell").isin(heavy_ids),
-                                       F.col("qid"))).alias("n_heavy"),
-            ).collect()[0]
-            q_heavy = q_pts.join(F.broadcast(near_heavy), "qid")
-            q_rest = q_pts.join(F.broadcast(near_heavy), "qid", "left_anti")
-            parts = []
-            if counts.n_heavy < counts.n_q:
-                parts.append(_knn_core(q_rest, i_pts, k, res, max_rounds,
-                                       initial_ring))
-            if counts.n_heavy > 0:
-                parts.append(_knn_core(q_heavy, i_pts, k, res_fine,
-                                       max_rounds, initial_ring))
-            if parts:                      # empty queries → default path
-                out = parts[0]
-                for p in parts[1:]:
-                    out = out.unionByName(p)
-                out = out.persist()
-                out.count()
-                i_pts.unpersist()
-                return out
-    out = _knn_core(q_pts, i_pts, k, res, max_rounds, initial_ring)
-    i_pts.unpersist()
-    return out
-
-
-def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
-              max_rounds: int = 4, initial_ring: int | None = None) -> DataFrame:
-    """One resolution level of the adaptive k-ring kNN (see knn_cells).
-    ``queries``/``items`` are (qid|iid, lon, lat) frames."""
     cell_h = 180.0 / (2 ** res)                   # cell size in degrees
 
-    items_c = assign_cells(items, res).select(
+    i_pts = items.select(F.col(iid_col).alias("iid"), "lon", "lat")
+    items_c = assign_cells(i_pts, res).select(
         F.col("iid"), F.col("lon").alias("i_lon"),
         F.col("lat").alias("i_lat"), F.col("cell_id").alias("i_cell"))
     items_c = items_c.persist()
 
-    pending = assign_cells(queries, res).select(
-        F.col("qid"), F.col("lon").alias("q_lon"),
-        F.col("lat").alias("q_lat"), F.col("cell_id").alias("q_cell"))
+    pending = assign_cells(
+        queries.select(F.col(qid_col).alias("qid"), "lon", "lat"), res
+    ).select(F.col("qid"), F.col("lon").alias("q_lon"),
+             F.col("lat").alias("q_lat"), F.col("cell_id").alias("q_cell"))
 
-    ring = initial_ring
-    ring_src = "explicit"
-    if ring is None:
-        # statistics cache: the density-derived ring depends only on
-        # (items plan, res, k) — engines cache table stats for the same
-        # reason.  semanticHash canonicalizes expression ids, so a
-        # rebuilt-but-identical plan (or a fresh read of the same path)
-        # hits; a different filter/source misses.  The ring is
-        # CORRECTNESS-NEUTRAL (adaptive growth + the kth≤guard proof
-        # make any initial ring exact) so even a stale hit after the
-        # underlying files changed costs at most one extra round.
-        # Measured: the occupancy job is ~0.7s of fixed overhead per
-        # call at sf0.1 (warm min 3.15s vs 4.0s with it) — repeat kNN
-        # calls against the same corpus skip it entirely.
-        stats_key = (items._jdf.queryExecution().analyzed().semanticHash(),
-                     res, k)
-        ring = _KNN_RING_CACHE.get(stats_key)
-        if ring is not None:            # hit-reinsert → LRU eviction order
-            _KNN_RING_CACHE[stats_key] = _KNN_RING_CACHE.pop(stats_key)
-        ring_src = "cached"
+    # the ring depends only on (items plan, res, k); semanticHash
+    # canonicalizes expression ids, so a rebuilt-but-identical plan (or
+    # a fresh read of the same path) hits and a different filter or
+    # source misses.  A stale hit after the files changed costs at most
+    # one extra round: ring growth + the guard proof make any initial
+    # ring exact.
+    stats_key = (i_pts._jdf.queryExecution().analyzed().semanticHash(),
+                 res, k)
+    ring = _KNN_RING_CACHE.pop(stats_key, None)
+    ring_src = "cached"
     if ring is None:
         ring_src = "computed"
         # ONE job: per-cell histogram → mean + dispersion of occupancy
-        # (it also warms the items_c cache the round reuses).  The mean
-        # sizes the ring so a MEAN-density neighborhood holds ≥4k
-        # candidates; when occupancy is highly dispersed (cv > 1 —
-        # hotspot corpora like the Tokyo cell) the mean OVERSTATES what
-        # sparse-region queries will see, so +1 over-provisions their
-        # neighborhoods and the round-2/brute-force residue those few
-        # queries would otherwise trigger (a whole extra job chain for
-        # a handful of stragglers) never runs.  (A/B-ed and REJECTED:
-        # folding this aggregate into round 1 as a broadcast scalar
-        # subquery — the broadcast subtree executes before items_c is
-        # cached, so the histogram recomputes against raw input and the
-        # "saved" job comes back as an eager broadcast build; measured
-        # min-of-6 regressed 4.5s → 6.7s.  ALSO A/B-ed and REJECTED,
-        # round 5: PER-QUERY initial rings from a histogram join —
-        # probing each query's ring-1 neighborhood count and shrinking
-        # its ring to what local density supports.  It cut round-1
-        # candidates 9.5M → ~1.9M at sf0.1, but the machinery lost
-        # more than the smaller sort saved THREE separate ways: the
-        # hist join inflated size estimates and flipped ring_cells off
-        # the broadcast side into a hotspot-skewed shuffle join
-        # (6s → 20s, 63+1-task tails); fixing that with an eager
-        # localCheckpoint added a job and pinned pending to AQE's
-        # 1-partition coalesce, serializing the fan-out; and a
-        # 1-in-1000 shrunk query failed its guard, waking the whole
-        # brute-force-fallback job chain.  Best case 12s vs the 5.4s
-        # baseline in the same host window.  The guard-radius filter
-        # below gets the volume win with zero new jobs.)
+        # (it also warms the items_c cache the rounds reuse).  When
+        # occupancy is dispersed (cv > 1, a hotspot corpus) the mean
+        # overstates what sparse-region queries see, so +1 ring
+        # over-provisions them instead of sending them to round 2.
         occ = (items_c.groupBy("i_cell").agg(F.count("*").alias("cn"))
                .agg(F.sum("cn").alias("n"), F.count("*").alias("c"),
                     F.stddev_pop("cn").alias("sd")).collect()[0])
@@ -395,7 +298,7 @@ def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
             ring += 1
         if len(_KNN_RING_CACHE) >= 64:      # bounded: drop oldest entry
             _KNN_RING_CACHE.pop(next(iter(_KNN_RING_CACHE)))
-        _KNN_RING_CACHE[stats_key] = ring
+    _KNN_RING_CACHE[stats_key] = ring       # (re)insert → LRU order
     pending = pending.withColumn("ring", F.lit(ring))
     cur_max_ring = ring           # driver-tracked bound → static offsets
     KNN_LAST_RUN.clear()
@@ -404,12 +307,6 @@ def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
                          "pending_after_round": [], "stragglers": 0,
                          "fallback_queries": 0})
 
-    MAX_RING = 24                          # beyond this → brute force
-    # below this many pending queries another cell round costs more in
-    # fixed job overhead than the bounded brute-force fallback (measured
-    # ~5s/round on tiny frames vs <1s cross join at local scale; at
-    # cluster scale ≤64 queries against items is a broadcast NLJ)
-    MIN_ROUND_PENDING = 64
     round_results: list[DataFrame] = []
     stragglers: list[DataFrame] = []
     defer_unpersist: list[DataFrame] = []
@@ -417,55 +314,23 @@ def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
     n_pending = None
     n_strag_total = 0
     guard = (F.col("ring") * cell_h) ** 2
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         ring_cells = _ring_cells_df(pending, res, cur_max_ring)
-        # project to the 4 columns the window actually consumes BEFORE
-        # the qid exchange: scored is persisted below, and a cache
-        # materializes every column of its schema, so without this
-        # select the shuffle would carry the join's full row (both
-        # coordinate pairs + 2 cell ids ≈ 80 B/row instead of ~30) —
-        # Catalyst cannot prune through the persist boundary.  (A/B-ed
-        # and REJECTED: a per-query radius pre-prune that broadcasts the
-        # cell histogram onto the ring cells and keeps only candidates
-        # within r_q = R·sqrt(8k/n_q) — provably exact when ≥k survive —
-        # cut the window input 9.4M→3.5M on the clustered sf0.1 corpus
-        # but its own broadcast+join bookkeeping cost more than the
-        # smaller sort saved (stat job 2.3s→3.9s) and pushed ~1% of
-        # queries into an extra round; at this scale candidate
-        # GENERATION, not the qid exchange, is the floor.  Three more
-        # attacks on the window input, A/B-ed and REJECTED round 5, all
-        # at sf0.1/150k items/1000 queries, warm min-of-3: (a) Arrow
-        # mapInPandas per-partition partial top-k before the window —
-        # 9.4M→~300k exchange rows but the Arrow crossing of 9.4M
-        # candidate rows costs more than the JVM shuffle+sort it
-        # replaces, 6.4s vs 3.9s; (b) shuffle_hash-hinted cell join +
-        # an exchange-free (n_cell, qid) pre-window (HashPartitioning
-        # (n_cell) satisfies the clustered distribution) — the hotspot
-        # cell's ~7.6M join rows land in ONE task whose local sort
-        # serializes the stage, 14.2s vs 5.6s; the qid exchange is
-        # precisely what spreads the hotspot 32 ways; (c) prepending
-        # xxhash64(qid) to the window partition key to radix-ify the
-        # shared-prefix string sort — no measurable change (4.2s both):
-        # Tungsten's sort is not prefix-comparison-bound here.)
+        # project to the 4 columns the window consumes BEFORE the qid
+        # exchange: scored is persisted below, a cache materializes
+        # every column of its schema, and Catalyst cannot prune through
+        # the persist boundary
         cand = (ring_cells.join(items_c, ring_cells.n_cell == items_c.i_cell)
                 .select(F.col("qid"), F.col("iid"), F.col("ring"),
                         _sq_dist(F.col("q_lon"), F.col("q_lat"),
                                  F.col("i_lon"), F.col("i_lat"))
                         .alias("dist2"))
-                # guard-radius pre-filter: a candidate with dist2 >
-                # (ring·cell)² can never be part of a PROVEN top-k —
-                # done-ness requires kth ≤ guard, and then all true
-                # top-k members are ≤ kth ≤ guard, so none were
-                # dropped; an unproven query contributes nothing this
-                # round anyway.  Row-level filter inside the same
-                # codegen stage (no new job, no plan-shape change)
-                # that halves the window-sort input at sf0.1 (ring-2
-                # circle vs 5×5 square: π·4/25).  Cost: a query with
-                # <k in-guard candidates re-rings ×4 (the starved
-                # path) instead of the kth-informed jump — its true
-                # kth is no longer observable this round.
+                # guard-radius filter: every point within (ring·cell)
+                # of the query lies in its ring's cells, so once ≥k
+                # candidates pass, the k nearest of them are the true
+                # k nearest
                 .filter(F.col("dist2") <= guard))
-        # ONE shuffle by qid serves rank, per-query count and kth: the
+        # ONE shuffle by qid serves rank and per-query count: the
         # unordered window reuses the rank window's partitioning (no
         # extra exchange, no separate groupBy+join-back, no broadcast)
         w = Window.partitionBy("qid").orderBy(F.col("dist2").asc(),
@@ -473,36 +338,23 @@ def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
         wq = Window.partitionBy("qid")
         scored = (cand.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k)
-                  .withColumn("n", F.count("*").over(wq))
-                  .withColumn("kth", F.max("dist2").over(wq))).persist()
-        # a query is proven-complete when its worst kept distance fits
-        # inside its own guaranteed ring radius
-        done_rows = scored.filter((F.col("n") >= k) & (F.col("kth") <= guard)) \
+                  .withColumn("n", F.count("*").over(wq))).persist()
+        done_rows = scored.filter(F.col("n") >= k) \
             .select("qid", "iid", "dist2", "rank")
         round_results.append(done_rows)
         defer_unpersist.append(scored)
-        # per-query stats ride the rank-1 row — already unique per qid
-        per_q = scored.filter(F.col("rank") == 1).select("qid", "n", "kth")
+        # per-query counts ride the rank-1 row — already unique per qid
+        per_q = scored.filter(F.col("rank") == 1).select("qid", "n")
         st = pending.join(per_q, "qid", "left").fillna({"n": 0})
-        # adaptive growth: a query that already holds k candidates only
-        # needs ring' ≥ sqrt(kth)/cell_h — round 2 is then provably
-        # final for it; candidate-starved queries grow 4×
-        new_ring = F.when(
-            F.col("n") >= k,
-            F.greatest(F.ceil(F.sqrt(F.col("kth")) / F.lit(cell_h)),
-                       F.col("ring") + 1)
-        ).otherwise(F.col("ring") * 4).cast("int")
-        unresolved = (st.filter((F.col("n") < k) | (F.col("kth") > guard))
+        unresolved = (st.filter(F.col("n") < k)
                       .select("qid", "q_lon", "q_lat", "q_cell",
-                              new_ring.alias("ring")).persist())
-        # ring overflow → isolated queries: route to the brute-force
-        # fallback instead of joining thousands of cells per query
+                              (F.col("ring") * 4).alias("ring")).persist())
         stragglers.append(unresolved.filter(F.col("ring") > MAX_RING)
                           .drop("ring"))
         next_pending = unresolved.filter(F.col("ring") <= MAX_RING).persist()
         # one agg over the persisted unresolved frame counts BOTH the
-        # still-pending and the overflow (straggler) sides, so the
-        # final leftovers isEmpty() probe becomes driver arithmetic
+        # still-pending and the straggler sides, so the fallback size
+        # needs no extra job
         stat = unresolved.agg(
             F.count(F.when(F.col("ring") <= MAX_RING, 1)).alias("n"),
             F.max(F.when(F.col("ring") <= MAX_RING,
@@ -510,43 +362,32 @@ def _knn_core(queries: DataFrame, items: DataFrame, k: int, res: int,
             F.count(F.when(F.col("ring") > MAX_RING, 1)).alias("ns"),
         ).collect()[0]
         n_strag_total += int(stat.ns)
-        n_before, n_pending = n_pending, stat.n
+        n_before, n_pending = n_pending, int(stat.n)
         KNN_LAST_RUN["rounds"] = rnd + 1
-        KNN_LAST_RUN["pending_after_round"].append(int(stat.n))
+        KNN_LAST_RUN["pending_after_round"].append(n_pending)
         KNN_LAST_RUN["stragglers"] = n_strag_total
         cur_max_ring = int(stat.mr) if stat.mr is not None else 1
         pending.unpersist()
         defer_unpersist.append(unresolved)   # stragglers still reference it
         pending = next_pending
-        if n_pending == 0:
-            break
-        if n_pending <= MIN_ROUND_PENDING:
-            break                          # residue → brute-force fallback
-        if n_before is not None and n_pending == n_before:
-            break                          # ring growth isn't resolving: bail
-    leftovers = pending.select("qid", "q_lon", "q_lat")
-    for s in stragglers:
-        leftovers = leftovers.unionByName(s.select("qid", "q_lon", "q_lat"))
-    # counts tracked driver-side during the rounds (isEmpty would be an
-    # extra job); n_pending is None only if the loop never ran
-    n_left = None if n_pending is None else n_pending + n_strag_total
-    KNN_LAST_RUN["fallback_queries"] = n_left if n_left is not None else -1
-    if (n_left is None and not leftovers.isEmpty()) or (n_left or 0) > 0:
-        # isolated/sparse-region queries: brute-force against all items.
-        # A bounded residue takes the broadcast-queries partial-top-k
-        # plan (no q×n shuffle); an unbounded one (loop never ran /
-        # pathological straggler count) keeps the generic window plan.
-        lq = leftovers.select(F.col("qid"), F.col("q_lon").alias("lon"),
-                              F.col("q_lat").alias("lat"))
-        li = items_c.select(F.col("iid"), F.col("i_lon").alias("lon"),
+        if n_pending <= MIN_ROUND_PENDING or n_pending == n_before:
+            break             # small residue, or ring growth isn't resolving
+    n_left = n_pending + n_strag_total
+    KNN_LAST_RUN["fallback_queries"] = n_left
+    if n_left > 0:
+        # a bounded residue takes the broadcast-queries partial top-k
+        # (no q×n shuffle); a larger one the generic window plan
+        lq = pending.select("qid", "q_lon", "q_lat")
+        for s in stragglers:
+            lq = lq.unionByName(s.select("qid", "q_lon", "q_lat"))
+        lq = lq.select("qid", F.col("q_lon").alias("lon"),
+                       F.col("q_lat").alias("lat"))
+        li = items_c.select("iid", F.col("i_lon").alias("lon"),
                             F.col("i_lat").alias("lat"))
-        if n_left is not None and n_left <= 1024:
-            round_results.append(knn_geo_bq(lq, li, k,
-                                            qid_col="qid", iid_col="iid"))
+        if n_left <= 1024:
+            round_results.append(knn_geo_bq(lq, li, k))
         else:
-            round_results.append(knn_geo(lq, li, k, qid_col="qid",
-                                         iid_col="iid",
-                                         broadcast_items=False))
+            round_results.append(knn_geo(lq, li, k, broadcast_items=False))
     results = round_results[0]
     for extra in round_results[1:]:
         results = results.unionByName(extra)

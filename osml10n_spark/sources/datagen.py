@@ -20,17 +20,13 @@ import pandas as pd
 
 from ..imaging import encode_image, phash64
 
-__all__ = ["images_schema_ddl", "generate_images", "caption_for",
+__all__ = ["generate_images", "caption_for",
            "visual_for_id", "videos_with_shared_frames", "audio_for_id",
            "IMAGES_DDL"]
 
 IMAGES_DDL = ("image_id string, bytes binary, w int, h int, fmt string, "
               "caption string, phash long, lon double, lat double, "
               "tags map<string,string>")
-
-
-def images_schema_ddl() -> str:
-    return IMAGES_DDL
 
 # caption corpora per class --------------------------------------------------
 _LATIN = ["Main Road", "Trafalgar Square", "Schillerstraße", "Kronenplatz",

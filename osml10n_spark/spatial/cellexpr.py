@@ -15,8 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["cell_expr", "tile_expr", "zorder_expr", "parent_expr",
-           "hexcell_expr", "hex_parent_expr"]
+__all__ = ["cell_expr", "tile_expr", "zorder_expr", "hexcell_expr",
+           "hex_parent_expr"]
 
 _M1 = 0x0000FFFF0000FFFF
 _M2 = 0x00FF00FF00FF00FF
@@ -85,13 +85,6 @@ def _compact(x: Column) -> Column:
     x = (x.bitwiseOR(F.shiftrightunsigned(x, 8))).bitwiseAND(F.lit(_M1))
     x = (x.bitwiseOR(F.shiftrightunsigned(x, 16))).bitwiseAND(F.lit(0xFFFFFFFF))
     return x
-
-
-def parent_expr(cell: Column, res: int, parent_res: int) -> Column:
-    """JVM twin of cellindex.cell_to_parent for known resolutions."""
-    morton = cell.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
-    return F.lit(parent_res << _RES_SHIFT).bitwiseOR(
-        F.shiftrightunsigned(morton, 2 * (res - parent_res))).cast("long")
 
 
 # ---------------------------------------------------------------- hex twin

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["PackedPolygon", "pack_polygon", "points_in_polygon"]
+__all__ = ["PackedPolygon", "pack_polygon"]
 
 
 class PackedPolygon:
@@ -119,8 +119,3 @@ def pack_polygon(cc: str, rings: list) -> PackedPolygon:
                              empty.copy())
     return PackedPolygon(cc, np.concatenate(x1s), np.concatenate(y1s),
                          np.concatenate(x2s), np.concatenate(y2s))
-
-
-def points_in_polygon(poly: PackedPolygon, lon, lat) -> np.ndarray:
-    return poly.contains(np.asarray(lon, dtype=np.float64),
-                         np.asarray(lat, dtype=np.float64))

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from osml10n_spark.contract import oracle_for
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -45,7 +46,7 @@ def test_query_runs_and_matches_oracle(spark, duck, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
     assert len(srows) >= 0          # runs
-    sql = entrymod.oracle_sql().get(name)
+    sql = oracle_for(name)
     if sql is None:
         assert len(srows) > 0       # rows-only check
         return

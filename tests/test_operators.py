@@ -83,9 +83,6 @@ def test_knn_ring_stats_cache(spark):
     assert KNN_LAST_RUN["ring_source"] == "cached"
     assert KNN_LAST_RUN["initial_ring"] == ring0
     assert first == second
-    # explicit ring bypasses the cache entirely
-    knn_cells(q, items, 4, res=6, initial_ring=2).count()
-    assert KNN_LAST_RUN["ring_source"] == "explicit"
     # different k → different stats key → recomputed
     knn_cells(q, items, 3, res=6).count()
     assert KNN_LAST_RUN["ring_source"] == "computed"
@@ -109,11 +106,11 @@ def test_knn_geo_bq_matches_window_plan(spark):
     assert a == b
 
 
-def test_knn_cells_split_heavy_matches_bruteforce(spark):
-    """split_heavy=True (hierarchical skew split) stays exact on a
-    corpus with one deliberately heavy cell, with queries on both
-    sides of the split (near-heavy → fine res, rest → base res);
-    also covers the fused single-job heavy/near-heavy detection."""
+def test_knn_cells_heavy_cell_matches_bruteforce(spark):
+    """knn_cells stays exact on a corpus with one deliberately heavy
+    cell (300 items within ±0.05° of one point) plus a sparse world
+    scatter, with queries inside the heavy cell, next to it, and in
+    sparse regions."""
     rng = np.random.default_rng(7)
     dense = [(f"d{i}", float(10.0 + rng.uniform(-0.05, 0.05)),
               float(50.0 + rng.uniform(-0.05, 0.05))) for i in range(300)]
@@ -125,10 +122,10 @@ def test_knn_cells_split_heavy_matches_bruteforce(spark):
         [("q0", 10.0, 50.0), ("q1", 10.2, 49.9), ("q2", -60.0, -20.0),
          ("q3", 120.0, 30.0)], "qid string, lon double, lat double")
     brute = {(r.qid, r.rank): r.iid for r in knn_geo(q, items, 2).collect()}
-    out = knn_cells(q, items, 2, res=6, split_heavy=True)
-    split = {(r.qid, r.rank): r.iid for r in out.collect()}
+    out = knn_cells(q, items, 2, res=6)
+    cells = {(r.qid, r.rank): r.iid for r in out.collect()}
     out.unpersist()
-    assert brute == split
+    assert brute == cells
 
 
 def test_knn_cells_sparse_fallback(spark):
@@ -139,8 +136,25 @@ def test_knn_cells_sparse_fallback(spark):
         "iid string, lon double, lat double")
     brute = {(r.qid, r.rank): r.iid for r in knn_geo(q, items, 2).collect()}
     cells = {(r.qid, r.rank): r.iid
-             for r in knn_cells(q, items, 2, res=6, max_rounds=2).collect()}
+             for r in knn_cells(q, items, 2, res=6).collect()}
     assert brute == cells
+
+
+def test_knn_null_coordinates_never_match(spark):
+    """An item without a position is nobody's neighbour and a query
+    without one gets no rows — on the brute-force plans (where a NULL
+    dist2 would otherwise sort first) and on the cell path alike."""
+    from osml10n_spark.operators.spatial import knn_geo_bq
+    items = spark.createDataFrame(
+        [("a", 0.0, 0.0), ("b", 1.0, 0.0), ("c", 5.0, 5.0),
+         ("n", None, None), ("m", 0.0, None)],
+        "iid string, lon double, lat double")
+    q = spark.createDataFrame([("q0", 0.1, 0.0), ("qn", None, 1.0)],
+                              "qid string, lon double, lat double")
+    want = {("q0", 1): "a", ("q0", 2): "b"}
+    for fn in (knn_geo, knn_geo_bq, knn_cells):
+        got = {(r.qid, r.rank): r.iid for r in fn(q, items, 2).collect()}
+        assert got == want, fn.__name__
 
 
 def test_assign_country_gated(spark):

@@ -18,7 +18,12 @@ from osml10n_spark.spatial.cellindex import (
 )
 from osml10n_spark.spatial.prepared import PreparedLookup
 
-INDEX = load_boundaries()
+
+@pytest.fixture(scope="module")
+def index():
+    """The reference boundary set, loaded once for the tests that need
+    it — a missing directory fails only those tests."""
+    return load_boundaries()
 
 
 # Parity: centroids of the reference test bboxes (runtests.lua:146-173)
@@ -33,15 +38,15 @@ INDEX = load_boundaries()
     (121.0, 23.7, "tw"),
     (0.0, 0.0, ""),
 ])
-def test_pip_reference_points(lon, lat, cc):
-    assert INDEX.lookup_one(lon, lat) == cc
+def test_pip_reference_points(index, lon, lat, cc):
+    assert index.lookup_one(lon, lat) == cc
 
 
-def test_prepared_lookup_matches_linear_scan():
+def test_prepared_lookup_matches_linear_scan(index):
     rng = np.random.default_rng(42)
     # points concentrated around the boundary bboxes plus world-uniform
     lons, lats = [], []
-    for poly in INDEX.polys:
+    for poly in index.polys:
         xmin, ymin, xmax, ymax = poly.bbox
         pad_x = (xmax - xmin) * 0.3 + 0.01
         pad_y = (ymax - ymin) * 0.3 + 0.01
@@ -51,8 +56,8 @@ def test_prepared_lookup_matches_linear_scan():
     lats.append(rng.uniform(-90, 90, 500))
     lon = np.concatenate(lons)
     lat = np.concatenate(lats)
-    plain = INDEX.lookup(lon, lat)
-    prep = PreparedLookup(INDEX, res=9).lookup(lon, lat)
+    plain = index.lookup(lon, lat)
+    prep = PreparedLookup(index, res=9).lookup(lon, lat)
     assert (plain == prep).all()
 
 
@@ -87,10 +92,10 @@ def test_k_ring_symmetry_and_size():
     assert len(k_ring(edge, 1)) == 9
 
 
-def test_cover_soundness():
+def test_cover_soundness(index):
     # every point inside a polygon must fall in a cover cell
     rng = np.random.default_rng(3)
-    for poly in INDEX.polys:
+    for poly in index.polys:
         interior, boundary = polygon_cover(poly, res=9)
         cover = set(interior.tolist()) | set(boundary.tolist())
         xmin, ymin, xmax, ymax = poly.bbox

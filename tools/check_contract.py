@@ -7,6 +7,7 @@ import math, os, sys, time
 import duckdb
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as entrymod
+from osml10n_spark.contract import oracle_for
 from pyspark.sql import SparkSession
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -40,7 +41,6 @@ def _norm_rows(cols, rows):
 
 
 qs = entrymod.queries()
-oracles = entrymod.oracle_sql()
 only = set(sys.argv[2:])
 if only:
     unknown = only - set(qs)
@@ -59,7 +59,12 @@ for name in sorted(qs):
         fails.append(name)
         print(f"FAIL  {name}: spark error {e}")
         continue
-    sql = oracles.get(name)
+    try:
+        sql = oracle_for(name)
+    except Exception as e:
+        fails.append(name)
+        print(f"FAIL  {name}: oracle error {e}")
+        continue
     if sql is None:
         status = "rows-only" if len(srows) > 0 else "FAIL-empty"
         if status != "rows-only":
